@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..engine import parse
 from ..engine.dom import HTML_NS, Document, DocumentFragment, Element, Text
 from ..engine.extractor import find_body, text_content
+from .extract import gc_per_batch
 from .urls import canonicalize
 
 LINKS_SCHEMA = "url string, href string, target string, anchor string"
@@ -133,22 +134,11 @@ def extract_links(pages_df: DataFrame,
             for c in passthrough_cols)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
-
-        # same GC discipline as operators/extract.py: the DOM has
-        # parent↔child cycles, so disable the cyclic collector during
-        # the parse loop and collect once per Arrow batch
-        gc_was_enabled = gc.isenabled()
-        gc.disable()
-        try:
-            for pdf in batches:
-                yield links_batch(pdf, max_html_bytes, max_links_per_doc,
-                                  passthrough_cols)
-                del pdf
-                gc.collect()
-        finally:
-            if gc_was_enabled:
-                gc.enable()
+        # a full collection walks the whole worker heap, so the helper
+        # freezes the long-lived heap and collects only each batch's DOMs
+        for pdf in gc_per_batch(batches):
+            yield links_batch(pdf, max_html_bytes, max_links_per_doc,
+                              passthrough_cols)
 
     cols = ("url", "html") + tuple(passthrough_cols)
     return pages_df.select(*cols).mapInPandas(run, schema)

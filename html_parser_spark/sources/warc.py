@@ -149,7 +149,8 @@ def pages_to_warc(pages_df: DataFrame, n_files: int = 64) -> DataFrame:
         pdf = pdf.sort_values("url")
         # NaT → None (PAGES_SCHEMA is nullable): build_warc writes the
         # epoch sentinel instead of crashing the bucket task on
-        # NaT.strftime; NULL html packs as an empty payload
+        # NaT.strftime; NULL html packs as an empty payload (and NULL
+        # url as '', coalesced below so its bucket key is not NULL)
         recs = [(u, None if t is pd.NaT else t.to_pydatetime(),
                  bytes(h) if h is not None else b"")
                 for u, t, h in zip(pdf["url"], pdf["warc_ts"],
@@ -157,8 +158,9 @@ def pages_to_warc(pages_df: DataFrame, n_files: int = 64) -> DataFrame:
         return pd.DataFrame({"warc_id": [f"warc-{key[0]:05d}"],
                              "warc": [build_warc(recs)]})
 
-    bucketed = pages_df.select("url", "warc_ts", "html").withColumn(
-        "_b", F.crc32(F.col("url")) % n_files)
+    bucketed = pages_df.select(
+        F.coalesce(F.col("url"), F.lit("")).alias("url"), "warc_ts", "html"
+    ).withColumn("_b", F.crc32(F.col("url")) % n_files)
     return bucketed.groupBy("_b").applyInPandas(
         pack, schema="warc_id string, warc binary")
 

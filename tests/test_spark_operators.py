@@ -1692,6 +1692,22 @@ def test_warc_spark_pack_unpack_matches_input(spark, pages):
     assert a == b
 
 
+def test_warc_pack_unpack_keeps_null_url_row(spark):
+    """A NULL url packs as '' instead of failing its bucket task on a
+    NULL bucket key: every row survives the pack→unpack round-trip."""
+    from datetime import datetime
+
+    from html_parser_spark.sources.warc import pages_to_warc, warc_records
+
+    ts = datetime(2025, 3, 1, 12, 0, 0)
+    df = spark.createDataFrame(
+        [(None, ts, b"<p>no url</p>"), ("https://a/1", ts, b"<p>one</p>")],
+        "url string, warc_ts timestamp, html binary")
+    got = warc_records(pages_to_warc(df, n_files=4)).collect()
+    assert sorted((r["url"], bytes(r["html"])) for r in got) == [
+        ("", b"<p>no url</p>"), ("https://a/1", b"<p>one</p>")]
+
+
 def test_warc_walker_pathological_inputs():
     """Review repros pinned: negative Content-Length must not loop
     (salvage ends), out-of-ns-range WARC-Dates surface as NaT rather

@@ -5,6 +5,14 @@ through sources.pages.build_page — the same html the corpus bench
 parses), then measures parse+extract wall on ONE core, interleaved
 A/B-able, and optionally prints the cProfile top sites.
 
+Each rep also times the Spark kernel's Python path over the same
+sample without Spark: ``parse_extract_batch`` on 64-document pandas
+batches under the kernel's ``gc_per_batch``. The engine pass leaves
+garbage collection out of its timing and the kernel pass keeps it in,
+so kernel minus engine is the kernel's cost outside the engine (the
+benchmark's ``overhead_s``) on one core: per-row pandas work, output
+frames and the per-batch collections.
+
 Usage: python tools/profile_engine.py [n_docs] [reps] [--profile]
 """
 from __future__ import annotations
@@ -15,6 +23,12 @@ import time
 sys.path.insert(0, ".")
 
 import duckdb  # noqa: E402
+import pandas as pd  # noqa: E402
+
+from html_parser_spark.operators.extract import (  # noqa: E402
+    gc_per_batch, parse_extract_batch)
+
+BATCH = 64  # the job's spark.sql.execution.arrow.maxRecordsPerBatch
 
 
 def sample(n_docs: int):
@@ -28,12 +42,27 @@ def sample(n_docs: int):
 
 
 def one_pass(pages) -> float:
+    """Engine wall with the kernel's GC discipline but its per-batch
+    collections left out of the timing, like the benchmark's
+    ``engine.parse_s``."""
     from html_parser_spark.engine import parse
     from html_parser_spark.engine.extractor import extract_body_text
+    wall = 0.0
+    batches = (pages[i:i + BATCH] for i in range(0, len(pages), BATCH))
+    for batch in gc_per_batch(batches):
+        t0 = time.perf_counter()
+        for raw in batch:
+            o = parse(raw)
+            extract_body_text(o.document)
+        wall += time.perf_counter() - t0
+    return wall
+
+
+def kernel_pass(frames) -> float:
     t0 = time.perf_counter()
-    for raw in pages:
-        o = parse(raw)
-        extract_body_text(o.document)
+    for seq, pdf in enumerate(gc_per_batch(iter(frames))):
+        parse_extract_batch(pdf, -1, seq, 64 * 1024 * 1024, 10_000,
+                            with_spans=False)
     return time.perf_counter() - t0
 
 
@@ -43,13 +72,26 @@ def main():
     reps = int(args[1]) if len(args) > 1 else 3
     pages = sample(n_docs)
     mb = sum(len(p) for p in pages) / 1e6
+    urls = [f"https://profile/{i}" for i in range(len(pages))]
+    frames = [pd.DataFrame({"url": urls[i:i + BATCH],
+                            "html": pages[i:i + BATCH]})
+              for i in range(0, len(pages), BATCH)]
     one_pass(pages[:40])  # warm imports/regex caches
-    walls = [one_pass(pages) for _ in range(reps)]
-    best = min(walls)
-    mid = sorted(walls)[len(walls) // 2]
-    print(f"docs={n_docs} mb={mb:.2f} best={best:.3f}s "
-          f"({mb/best:.2f} MB/s) mid={mid:.3f}s ({mb/mid:.2f} MB/s) "
-          f"walls={[round(w,3) for w in walls]}")
+    kernel_pass(frames[:1])
+    walls, kwalls = [], []
+    for _ in range(reps):  # interleaved, so both see the same minutes
+        walls.append(one_pass(pages))
+        kwalls.append(kernel_pass(frames))
+    mids = {}
+    for name, ws in (("engine", walls), ("kernel", kwalls)):
+        best = min(ws)
+        mid = mids[name] = sorted(ws)[len(ws) // 2]
+        print(f"{name}: docs={n_docs} mb={mb:.2f} best={best:.3f}s "
+              f"({mb/best:.2f} MB/s) mid={mid:.3f}s ({mb/mid:.2f} MB/s) "
+              f"walls={[round(w,3) for w in ws]}")
+    diff = mids["kernel"] - mids["engine"]
+    print(f"kernel - engine: mid={diff:.3f}s "
+          f"({diff / n_docs * 1e6:.0f} us/doc, {BATCH}-doc batches)")
     if "--profile" in sys.argv:
         import cProfile
         import pstats
