@@ -143,7 +143,16 @@ def pages_to_warc(pages_df: DataFrame, n_files: int = 64) -> DataFrame:
     ``n_files`` multi-record WARC blobs, bucketed by url hash. Records
     within a blob are ordered by url so the blob bytes are a pure
     function of the bucket's row set (deterministic across
-    partitionings — the property every oracle here leans on)."""
+    partitionings — the property every oracle here leans on).
+
+    The epoch sentinel does not round-trip as NULL. WARC-Date is
+    mandatory, so a NULL ``warc_ts`` packs as 1970-01-01T00:00:00Z,
+    and :func:`warc_records` reads that back as a real 1970 timestamp.
+    :func:`warc_records` also turns a parseable WARC-Date outside
+    pandas' datetime64[ns] range (year 9999, say) into NULL. So a
+    pack → unpack → repack cycle rewrites such a date to the 1970
+    sentinel. A consumer that must tell a missing fetch time from a
+    real 1970 one should treat ``warc_ts`` = epoch as missing."""
 
     def pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("url")

@@ -2,12 +2,15 @@
 /root/reference/tests/phpunit.dist.xml — Charset, Parser, Serializer,
 Encoding-change)."""
 
+import os
+
 import pytest
 from hypothesis import given, settings, strategies as st
 
 from html_parser_spark.engine import charset, parse, parse_fragment, serialize, serialize_inner
 from html_parser_spark.engine.dom import QUIRKS, NO_QUIRKS
 from html_parser_spark.engine.extractor import extract_text, text_content
+from test_reference_parity import REF
 
 
 class TestCharset:
@@ -261,7 +264,77 @@ class TestErrorRegistry:
             for code in parse(data).errors:
                 assert code in ALL_CODES, code
 
+    # The WHATWG HTML standard's table of parse errors (§13.2.2 "Parse
+    # errors"), one code per row, in the table's order.
+    WHATWG_CODES = """
+        abrupt-closing-of-empty-comment
+        abrupt-doctype-public-identifier
+        abrupt-doctype-system-identifier
+        absence-of-digits-in-numeric-character-reference
+        cdata-in-html-content
+        character-reference-outside-unicode-range
+        control-character-in-input-stream
+        control-character-reference
+        duplicate-attribute
+        end-tag-with-attributes
+        end-tag-with-trailing-solidus
+        eof-before-tag-name
+        eof-in-cdata
+        eof-in-comment
+        eof-in-doctype
+        eof-in-script-html-comment-like-text
+        eof-in-tag
+        incorrectly-closed-comment
+        incorrectly-opened-comment
+        invalid-character-sequence-after-doctype-name
+        invalid-first-character-of-tag-name
+        missing-attribute-value
+        missing-doctype-name
+        missing-doctype-public-identifier
+        missing-doctype-system-identifier
+        missing-end-tag-name
+        missing-quote-before-doctype-public-identifier
+        missing-quote-before-doctype-system-identifier
+        missing-semicolon-after-character-reference
+        missing-whitespace-after-doctype-public-keyword
+        missing-whitespace-after-doctype-system-keyword
+        missing-whitespace-before-doctype-name
+        missing-whitespace-between-attributes
+        missing-whitespace-between-doctype-public-and-system-identifiers
+        nested-comment
+        noncharacter-character-reference
+        noncharacter-in-input-stream
+        non-void-html-element-start-tag-with-trailing-solidus
+        null-character-reference
+        surrogate-character-reference
+        surrogate-in-input-stream
+        unexpected-character-after-doctype-system-identifier
+        unexpected-character-in-attribute-name
+        unexpected-character-in-unquoted-attribute-value
+        unexpected-equals-sign-before-attribute-name
+        unexpected-null-character
+        unexpected-question-mark-instead-of-tag-name
+        unexpected-solidus-in-tag
+        unknown-named-character-reference
+    """.split()
+
     def test_registry_covers_reference_standard_set(self):
+        """Every code in the WHATWG parse-error table is registered
+        verbatim. The tokenizer codes are that table less the one code
+        tree construction emits, plus encoding-error: the reference's
+        standardized set (constants 100-148)."""
+        from html_parser_spark.engine.errors import (ALL_CODES,
+                                                     TOKENIZER_CODES)
+        whatwg = set(self.WHATWG_CODES)
+        assert len(whatwg) == 49
+        assert sorted(whatwg - ALL_CODES) == []
+        assert TOKENIZER_CODES == (
+            whatwg - {"non-void-html-element-start-tag-with-trailing-solidus"}
+            | {"encoding-error"})
+
+    @pytest.mark.skipif(not os.path.isdir(REF),
+                        reason="reference checkout not present")
+    def test_registry_covers_reference_constants(self):
         """Every standardized code in the reference's registry
         (constants 100-148) is present verbatim; non-standard tree
         codes are either present or have a recorded alias."""

@@ -1828,3 +1828,43 @@ def test_curation_lm_pipeline_band_is_live(spark):
     expect_mean = 100 * sum(r["surprisal_bits"] for r in s) \
         // sum(r["n_words"] for r in s)
     assert means.pop() == expect_mean
+
+
+def test_kernel_workers_skip_unchanged_zip_rereads(spark, pages, tmp_path):
+    """Every Python worker that ran a kernel task has the kernel entry's
+    zip fix installed, so its later tasks skip PySpark's per-task zip
+    re-reads. Kernel workers mark themselves by pid from the
+    ``preprocess`` hook; a probe task then reports, per worker, whether
+    ``zipimport.zipimporter.invalidate_caches`` is the stat check."""
+    import os
+
+    import pandas as pd
+
+    from html_parser_spark.operators.extract import extract_pages
+
+    marks = str(tmp_path)
+    nparts = 2 * spark.sparkContext.defaultParallelism
+
+    def mark_worker(raw):
+        open(os.path.join(marks, str(os.getpid())), "w").close()
+        return raw
+
+    assert extract_pages(pages.repartition(nparts), with_spans=False,
+                         preprocess=mark_worker).count() == 500
+    kernel_pids = {int(p) for p in os.listdir(marks)}
+
+    def probe(batches):
+        import zipimport
+        for _ in batches:
+            pass
+        yield pd.DataFrame({
+            "pid": [os.getpid()],
+            "installed": [hasattr(zipimport.zipimporter.invalidate_caches,
+                                  "stat_checked")]})
+
+    seen = {r["pid"]: r["installed"] for r in
+            spark.range(0, 4 * nparts, numPartitions=2 * nparts)
+            .mapInPandas(probe, "pid long, installed boolean").collect()}
+    probed_kernel_pids = kernel_pids & seen.keys()
+    assert probed_kernel_pids
+    assert all(seen[p] for p in probed_kernel_pids)
